@@ -41,9 +41,7 @@ object BareLocalFs {
     "spark.sql.streaming.checkpointFileManagerClass" ->
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
         "FileSystemBasedCheckpointFileManager")) ++
-    scratchDir.map("spark.local.dir" -> _) ++
-    sys.env.get("SPARK_GRAFT_BYPASS_THRESHOLD").filter(_.nonEmpty)
-      .map("spark.shuffle.sort.bypassMergeThreshold" -> _)
+    scratchDir.map("spark.local.dir" -> _)
 
   /** Fastest available scratch for shuffle/spill files (`spark.local.dir`
     * — the Spark tuning guide's own advice: "on a fast, local disk in

@@ -1639,6 +1639,11 @@ object IcebergSink {
       positionDelete = true)
   }
 
+  /** [[deleteKeys]] writes its key set as one file up to this optimizer
+    * size estimate, and at [[DeleteWideWidth]] files above it. */
+  private val DeleteSingleFileMaxBytes = 256L << 20
+  private val DeleteWideWidth = 16
+
   /** Commit `keys` (columns = equality columns, any subset of the table
     * schema) as an equality-delete snapshot. Key columns are conformed to
     * the table's current types, so an int key frame deletes from a
@@ -1660,15 +1665,10 @@ object IcebergSink {
     // selections (deleteWhere over a whole estate), so an unconditional
     // coalesce(1) would funnel an unbounded key set through one write
     // task (guide §5 spill): single-file only under the optimizer's size
-    // estimate, bounded small width above it. Both knobs parameterized;
-    // the defaults keep every commit-bounded set at one file.
-    val singleFileMax = spark.conf
-      .get("spark.graft.delete.singleFileMaxBytes", (256L << 20).toString)
-      .toLong
-    val wideWidth = spark.conf
-      .get("spark.graft.delete.wideWidth", "16").toInt
+    // estimate, bounded small width above it. The threshold keeps every
+    // commit-bounded set at one file.
     val est = conformed.queryExecution.optimizedPlan.stats.sizeInBytes
-    val delWidth = if (est <= singleFileMax) 1 else wideWidth
+    val delWidth = if (est <= DeleteSingleFileMaxBytes) 1 else DeleteWideWidth
     val fileRecords = writeDataFiles(spark, table,
       conformed.coalesce(delWidth), commitUuid)
     if (fileRecords.map(_.records).sum == 0) {

@@ -3,26 +3,27 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 import graft.kafsql.{SchemaCol, TopicRegistry}
-import graft.kfs.{KfsCodec, KfsSource}
 
 /** Continuous ETL pipeline — the iceberg-processor equivalent (SURVEY §3.3)
   * on Structured Streaming:
   *
   *   segments → decode → validate (off/lenient/strict) → schema-on-read
-  *   extraction → table sink, with exactly-once-ish progress from the file
-  *   source checkpoint (replaces the reference's etcd offsets+leases,
+  *   extraction → table sink, with exactly-once-ish progress from the
+  *   stream checkpoint (replaces the reference's etcd offsets+leases,
   *   `processor.go:109-250`) plus offset-dedup in the sink for idempotent
   *   replay (`processor.go:252-264`).
   *
-  * Source is the KFS segment log via a `binaryFile` stream (only completed
-  * `.kfs` files are listed — the END! gate ran at write time; the stream
-  * only ever sees whole files, matching St2). `Trigger.AvailableNow`
-  * reproduces the poll-drain cadence; swap for `ProcessingTime(5s)` for the
-  * reference's default loop. Work distribution: Spark task scheduling
-  * replaces per-partition etcd leases (St4).
+  * Every lane reads the KFS segment log through ONE source, the DSv2
+  * micro-batch stream `kfs` ([[graft.kfs.KfsMicroBatchStream]]), which
+  * admits only END!-complete segments (matching St2), streams each one
+  * batch-at-a-time over Hadoop FileSystem (never a whole segment in task
+  * memory) and bounds a micro-batch with `max_segments_per_trigger`.
+  * `Trigger.AvailableNow` reproduces the poll-drain cadence; swap for
+  * `ProcessingTime(5s)` for the reference's default loop. Work
+  * distribution: Spark task scheduling replaces per-partition etcd leases
+  * (St4).
   */
 object Pipeline {
 
@@ -62,9 +63,17 @@ object Pipeline {
     else schemaCols.map(sc => TopicRegistry.extract(col("_value"), sc).isNotNull)
       .reduce(_ && _)
 
-  private[graft] val binaryFileSchema = StructType(Seq(
-    StructField("path", StringType), StructField("modificationTime", TimestampType),
-    StructField("length", LongType), StructField("content", BinaryType)))
+  /** The decoded log record stream every lane reads: the seven log
+    * columns from the DSv2 `kfs` source, at most `maxSegmentsPerTrigger`
+    * segments per micro-batch. */
+  private def logStream(spark: SparkSession, kfsRoot: String,
+      maxSegmentsPerTrigger: Option[Int]): DataFrame = {
+    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
+    maxSegmentsPerTrigger.foreach(n =>
+      reader.option("max_segments_per_trigger", n.toString))
+    reader.load().select(col("_topic"), col("_partition"), col("_offset"),
+      col("_ts_ms"), col("_key"), col("_value"), col("_headers"))
+  }
 
   /** Run the pipeline with columns + validation derived from a JSON-Schema
     * document (the registry-driven schema source, `iceberg.go:779-828`):
@@ -77,11 +86,11 @@ object Pipeline {
       checkpointDir: String,
       schemaJson: String,
       validation: Validation = Off,
-      maxFilesPerTrigger: Option[Int] = None,
+      maxSegmentsPerTrigger: Option[Int] = None,
       format: SinkFormat = ParquetDir): Unit = {
     val (cols, required) = SchemaRegistry.columnsFromJsonSchema(schemaJson)
     run(spark, kfsRoot, tablePath, checkpointDir, cols, validation,
-      maxFilesPerTrigger,
+      maxSegmentsPerTrigger,
       validateCols = Some(cols.filter(c => required(c.name))),
       format = format)
   }
@@ -96,16 +105,14 @@ object Pipeline {
     * decoded record stream BEFORE the sink (so before validation,
     * extraction, and offset-dedup) — quality gates, redaction, enrichment
     * run continuously inside the same checkpointed query instead of as a
-    * separate batch pass over the landed table. It must keep the eight
+    * separate batch pass over the landed table. It must keep the seven
     * decoded columns (narrowing rows, not schema).
-    * `source` picks the ingest path: `"files"` (default) is the Spark
-    * binaryFile stream — simple, but it materializes a whole segment's
-    * bytes per row, so peak task memory is one segment; `"kfs"` is the
-    * DSv2 micro-batch source (`KfsStreamV2`) whose readers STREAM
-    * segments batch-at-a-time over Hadoop FileSystem and gate on the
-    * END! footer — the path to run at real segment sizes. Both feed the
-    * identical 7-column record stream; checkpoints are per-source
-    * (don't swap sources under an existing checkpoint). */
+    * `maxSegmentsPerTrigger` bounds each micro-batch (the reference drains
+    * per poll tick; this is the source's admission-control knob for the
+    * same effect). `source` must be `"kfs"`, the only ingest path; the
+    * parameter stays for callers that still name it. A checkpoint left by
+    * the removed whole-segment `"files"` path cannot be resumed: start a
+    * fresh one and the sink's offset-dedup keeps the rerun idempotent. */
   def run(
       spark: SparkSession,
       kfsRoot: String,
@@ -113,47 +120,14 @@ object Pipeline {
       checkpointDir: String,
       schemaCols: Seq[SchemaCol] = Nil,
       validation: Validation = Off,
-      maxFilesPerTrigger: Option[Int] = None,
+      maxSegmentsPerTrigger: Option[Int] = None,
       validateCols: Option[Seq[SchemaCol]] = None,
       format: SinkFormat = ParquetDir,
       transform: DataFrame => DataFrame = identity,
-      source: String = "files"): Unit = {
-
-    import spark.implicits._
-    val decoded = source match {
-      case "kfs" =>
-        val r = spark.readStream.format("kfs").option("path", kfsRoot)
-        maxFilesPerTrigger.foreach(n =>
-          r.option("max_segments_per_trigger", n.toString))
-        r.load().select(col("_topic"), col("_partition"), col("_offset"),
-          col("_ts_ms"), col("_key"), col("_value"), col("_headers"))
-      case "files" =>
-        val reader = spark.readStream
-          .format("binaryFile")
-          .schema(binaryFileSchema)
-          .option("pathGlobFilter", "*.kfs")
-        // bound micro-batch size (the reference drains per poll tick; this
-        // is the Spark-native backpressure knob for the same effect)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        reader.load(s"$kfsRoot/*/*")
-          .select(col("path"), col("content"))
-          .as[(String, Array[Byte])]
-          .flatMap { case (path, content) =>
-            val (topic, partition) = KfsSource.topicPartitionOf(path)
-            KfsCodec.decodeSegment(content).map { r =>
-              (topic, partition, r.offset, r.timestampMs,
-                r.key, r.value,
-                r.headers.map(h => h.k ->
-                  (if (h.v == null) null else new String(h.v, "UTF-8"))).toMap)
-            }
-          }
-          .toDF("_topic", "_partition", "_offset", "_ts_ms", "_key", "_value",
-            "_headers")
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown pipeline source '$other' (expected 'files' or 'kfs')")
-    }
-
+      source: String = "kfs"): Unit = {
+    if (source != "kfs")
+      throw new IllegalArgumentException(s"unknown pipeline source '$source' " +
+        "(only 'kfs' is supported; the whole-segment 'files' path was removed)")
     // the WAL identity is (checkpoint path, streaming query id): the id
     // lives INSIDE the checkpoint (metadata file), so wiping the
     // checkpoint — which restarts batchIds at 0 — also changes the key,
@@ -163,7 +137,8 @@ object Pipeline {
     // batch with bid <= the old committed max. Resolved lazily on the
     // first batch: the metadata file is written at query start.
     var walKey: String = null
-    val query = transform(decoded).writeStream
+    val query = transform(logStream(spark, kfsRoot, maxSegmentsPerTrigger))
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -229,12 +204,7 @@ object Pipeline {
       indexPath: String,
       threshold: Double = 0.5,
       maxSegmentsPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
-    maxSegmentsPerTrigger.foreach(n =>
-      reader.option("max_segments_per_trigger", n.toString))
-    val decoded = reader.load().select(col("_topic"), col("_partition"),
-      col("_offset"), col("_ts_ms"), col("_key"), col("_value"), col("_headers"))
-    val query = decoded.writeStream
+    val query = logStream(spark, kfsRoot, maxSegmentsPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch0: DataFrame, _: Long) =>
@@ -338,12 +308,11 @@ object Pipeline {
       maintainEvery: Option[Int] = None,
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       compactEvery: Option[Int] = None): Unit = {
-    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
-    maxSegmentsPerTrigger.foreach(n =>
-      reader.option("max_segments_per_trigger", n.toString))
-    val decoded = reader.load().select(col("_topic"), col("_partition"),
-      col("_offset"), col("_ts_ms"), col("_key"), col("_value"))
-    val query = decoded.writeStream
+    // drop `_headers` inside the stream: the foreachBatch frame is
+    // materialized at the sink boundary, so a column still selected there
+    // is decoded into a map for every record even though no step reads it
+    val query = logStream(spark, kfsRoot, maxSegmentsPerTrigger)
+      .drop("_headers").writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch0: DataFrame, _: Long) =>
@@ -369,21 +338,14 @@ object Pipeline {
         // between them can never observe the keys transiently absent
         try if (!last.isEmpty) {
           val keys = Seq("topic", "partition", "key")
-          deleteWhen match {
-            case None =>
-              IcebergSink.upsertAtomic(ss, tablePath, last, keys)
-            case Some(pred) =>
-              val isDel = coalesce(pred, lit(false))
-              val inserts = last.where(!isDel)
-              val dels = last.where(isDel).select(keys.map(col): _*)
-              if (IcebergSink.load(ss, tablePath).isEmpty)
-                IcebergSink.append(ss, tablePath, inserts) // tombstones no-op
-              else
-                // upsertAtomic degrades to a delete-only delta on an
-                // empty insert half — one call covers every batch shape
-                IcebergSink.upsertAtomic(ss, tablePath, inserts, keys,
-                  extraDeleteKeys = Some(dels))
-          }
+          val isDel = deleteWhen.map(p => coalesce(p, lit(false)))
+          val inserts = isDel.fold(last)(d => last.where(!d))
+          val dels = isDel.map(d => last.where(d).select(keys.map(col): _*))
+          // one call covers every batch shape: on an absent table
+          // upsertAtomic is a plain append (tombstones no-op), and on an
+          // empty insert half it degrades to a delete-only delta
+          IcebergSink.upsertAtomic(ss, tablePath, inserts, keys,
+            extraDeleteKeys = dels)
           if (maintainEvery.isDefined || compactEvery.isDefined) {
             // cadence counts DATA commits from the table's own snapshot
             // history (maintenance commits are "replace" and don't
@@ -466,24 +428,29 @@ object Pipeline {
   private[etl] val TxnKeyProp = "graft.wal-key"
   private[etl] val TxnBatchProp = "graft.wal-batch"
 
+  /** Idempotent replay: drop the `rows` whose log coordinates
+    * (topic, partition, offset) are already in `existing`. The reference
+    * drops `offset <= committed` (processor.go:252-264), which assumes
+    * in-order consumption per partition; the exact form is an anti-join
+    * on the coordinates. Scale note: the probe side is bounded to the
+    * rows' offset range first, so the scan of `existing` prunes to the
+    * overlapping files instead of reading the whole table. */
+  private def dropLanded(rows: DataFrame, existing: DataFrame): DataFrame = {
+    val range = rows.agg(min(col("offset")), max(col("offset"))).collect().head
+    if (range.isNullAt(0)) rows
+    else rows.join(
+      existing.filter(col("offset").between(range.getLong(0), range.getLong(1)))
+        .select(col("topic"), col("partition"), col("offset")),
+      Seq("topic", "partition", "offset"), "left_anti")
+  }
+
   /** Append quarantined rows to the dead-letter table behind the same
     * log-coordinate offset-dedup as the main sink: a crash-replayed batch
     * re-derives the same DLQ rows and anti-joins them away. */
   private def dlqAppend(spark: SparkSession, dlqPath: String,
       rows: DataFrame): Unit = {
     val existing = TableSink.read(spark, dlqPath)
-    val fresh =
-      if (existing.isEmpty) rows
-      else {
-        val range = rows.agg(
-          min(col("offset")).as("lo"), max(col("offset")).as("hi"))
-          .collect().head
-        if (range.isNullAt(0)) rows
-        else rows.join(
-          existing.filter(col("offset").between(range.getLong(0), range.getLong(1)))
-            .select(col("topic"), col("partition"), col("offset")),
-          Seq("topic", "partition", "offset"), "left_anti")
-      }
+    val fresh = if (existing.isEmpty) rows else dropLanded(rows, existing)
     val f = fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try if (!f.isEmpty) TableSink.append(spark, dlqPath, f)
     finally f.unpersist()
@@ -520,15 +487,9 @@ object Pipeline {
       df.withColumn(sc.name, TopicRegistry.extract(col("value"), sc))
     }
 
-    // idempotent replay: drop records already in the table. The reference
-    // drops `offset <= committed` (processor.go:252-264), which assumes
-    // in-order segment consumption per partition; Spark's file stream gives
-    // no such ordering, so the exact form is an anti-join on the log
-    // coordinates. Scale note: the probe side is bounded to the batch's
-    // offset range first, so the parquet scan prunes to the overlapping
-    // files instead of reading the whole table.
-    // table emptiness from METADATA where the format has it (an isEmpty on
-    // the table frame is a scan job per micro-batch)
+    // idempotent replay (dropLanded). Table emptiness from METADATA where
+    // the format has it (an isEmpty on the table frame is a scan job per
+    // micro-batch)
     val tableIsEmpty = format match {
       case IcebergV2 =>
         IcebergSink.load(spark, tablePath).flatMap(_.currentSnapshotId).isEmpty
@@ -540,21 +501,10 @@ object Pipeline {
       // the range probe + anti-join (2 jobs + a table read per batch) are
       // redundant
       if (tableIsEmpty || skipDedup) withExtras
-      else {
-        val existing = format match {
-          case ParquetDir => TableSink.read(spark, tablePath)
-          case IcebergV2 => IcebergSink.read(spark, tablePath)
-        }
-        val range = withExtras.agg(
-          min(col("offset")).as("lo"), max(col("offset")).as("hi")).collect().head
-        if (range.isNullAt(0)) withExtras
-        else {
-          val seen = existing
-            .filter(col("offset") >= range.getLong(0) && col("offset") <= range.getLong(1))
-            .select(col("topic"), col("partition"), col("offset"))
-          withExtras.join(seen, Seq("topic", "partition", "offset"), "left_anti")
-        }
-      }
+      else dropLanded(withExtras, format match {
+        case ParquetDir => TableSink.read(spark, tablePath)
+        case IcebergV2 => IcebergSink.read(spark, tablePath)
+      })
     // materialize the dedup ONCE: the emptiness gate and the append would
     // otherwise each run the decode + anti-join
     val ded = deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

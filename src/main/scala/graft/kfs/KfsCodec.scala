@@ -13,8 +13,8 @@ import scala.collection.mutable.ArrayBuffer
   * rejected, mirroring the reference decoder (`decoder.go:198-201`).
   *
   * Pure byte-array ↔ record functions: no Spark types here, so the decoder
-  * can run inside any executor task (binaryFile scan, DSv2 partition reader,
-  * or a streaming source) without serialization surprises.
+  * can run inside any executor task (DSv2 partition reader, or
+  * KafsqlStream's binaryFile stream) without serialization surprises.
   */
 object KfsCodec {
 
@@ -61,8 +61,9 @@ object KfsCodec {
     // (KafsqlStream, via decodeSegmentLenient) classifies KfsFormatException
     // as "corrupt segment" and skips the whole file — the file-source log
     // never retries a file, so throwing there would poison the query
-    // permanently. BATCH scans stay strict: corrupt data in a finite scan
-    // should fail the task loudly, and a re-run after repair re-reads it.
+    // permanently. The DSv2 readers (batch scans and the `kfs` stream that
+    // Pipeline drains) stay strict: corrupt data should fail the task
+    // loudly, and a re-run after repair re-reads it.
     private def need(n: Int): Unit =
       if (n > remaining || pos < 0) throw new KfsFormatException(
         s"truncated: need $n bytes at $pos of ${buf.length}")

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * peak task memory is one record batch, never a whole segment. Earlier
   * rounds used `binaryFile` + flatMap here (whole-file reads, like the
   * reference's full-object downloads, `decoder.go:58-131`); that shape
-  * survives only where file-STREAM semantics are required
-  * ([[graft.streaming.KafsqlStream]], [[graft.etl.Pipeline]]).
+  * survives only in [[graft.streaming.KafsqlStream]], whose contract
+  * skips corrupt-but-complete segments. [[graft.etl.Pipeline]] reads
+  * through the streamed DSv2 source.
   */
 object KfsSource {
 

@@ -389,15 +389,38 @@ class PgWireServer(
 
   /** Text-format parameter substitution, like the reference's extended-query
     * bind: numeric values inline bare, everything else as a quoted literal.
-    * Highest-numbered placeholders first so $12 is not clobbered by $1. */
-  private def substituteParams(sql: String, params: Seq[String]): String =
-    params.zipWithIndex.sortBy(-_._2).foldLeft(sql) { case (acc, (v, i)) =>
-      val lit =
-        if (v == null) "NULL"
-        else if (v.matches("-?\\d+(\\.\\d+)?")) v
-        else "'" + v.replace("'", "''") + "'"
-      acc.replace("$" + (i + 1), lit)
+    * One left-to-right scan: `'...'` literals (with `''` escapes) copy
+    * verbatim, so a `$1` inside one is text, not a placeholder; `$n` reads
+    * its digits greedily, so `$12` is never `$1` then `2`; and each
+    * placeholder is replaced exactly once, so a bound value containing
+    * `$1` is never substituted again. A `$n` with no bound value stays
+    * as written and fails in the parser. */
+  private def substituteParams(sql: String, params: Seq[String]): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (c == '\'') {
+        // the literal ends at the first quote not doubled as an escape
+        var q = sql.indexOf('\'', i + 1)
+        while (q >= 0 && q + 1 < sql.length && sql.charAt(q + 1) == '\'')
+          q = sql.indexOf('\'', q + 2)
+        val end = if (q < 0) sql.length else q + 1
+        out.append(sql.substring(i, end)); i = end
+      } else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
+        var j = i + 1
+        while (j < sql.length && sql.charAt(j).isDigit) j += 1
+        sql.substring(i + 1, j).toIntOption.flatMap(n => params.lift(n - 1)) match {
+          case None => out.append(sql.substring(i, j))
+          case Some(null) => out.append("NULL")
+          case Some(n) if n.matches("-?\\d+(\\.\\d+)?") => out.append(n)
+          case Some(t) => out.append('\'').append(t.replace("'", "''")).append('\'')
+        }
+        i = j
+      } else { out.append(c); i += 1 }
     }
+    out.toString
+  }
 
   /** One query → (schema, collected rows); shared by the simple- and
     * extended-protocol paths. Throws KafsqlException / runtime errors. */

@@ -385,13 +385,8 @@ object EtlPack extends QueryPack {
           Pipeline.run(s, root, table, ckpt,
             schemaCols = Seq(SchemaCol("k", "int", "$.k")),
             validation = Pipeline.Lenient,
-            maxFilesPerTrigger = Some(math.max(2, nSegs / 4)),
-            format = Pipeline.IcebergV2,
-            // the DSv2 streamed ingest path: segments are decoded
-            // batch-at-a-time (never a whole segment in memory) with
-            // END!-gated admission — the configuration you'd run at real
-            // segment sizes
-            source = "kfs")
+            maxSegmentsPerTrigger = Some(math.max(2, nSegs / 4)),
+            format = Pipeline.IcebergV2)
         }
         IcebergSink.read(s, table)
           .groupBy(col("partition"))

@@ -13,7 +13,13 @@ import graft.kfs.{KfsCodec, KfsSource}
   * they land.
   *
   * Source = `binaryFile` file stream over completed `.kfs` segments
-  * (St2): [[KfsLayout.writeSegment]] publishes segments by atomic rename so
+  * (St2) — the last `binaryFile` reader in the engine; every other
+  * streaming lane ([[graft.etl.Pipeline]]) reads the DSv2 `kfs` source,
+  * which streams a segment batch-at-a-time instead of loading it whole.
+  * This one stays for its skip contract: the DSv2 reader is strict and
+  * streamed, so it can neither judge a segment corrupt before emitting
+  * its rows nor skip it all-or-nothing.
+  * [[KfsLayout.writeSegment]] publishes segments by atomic rename so
   * a listed file is always whole, and the decode below re-checks the END!
   * footer and *skips* (rather than poisons the query on) any segment a
   * foreign writer left incomplete OR corrupt — incomplete footers and

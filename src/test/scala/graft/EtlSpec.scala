@@ -232,7 +232,7 @@ class EtlSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("etl_wipe_ck").toString + "/ck"
     val cols = Seq(SchemaCol("n", "long", "$.n"))
     Pipeline.run(spark, root, table, ckpt, cols,
-      format = Pipeline.IcebergV2, source = "kfs")
+      format = Pipeline.IcebergV2)
     assert(graft.etl.IcebergSink.read(spark, table).count() == 50)
 
     // wipe the checkpoint, produce more — the restarted query's batch 0
@@ -242,7 +242,7 @@ class EtlSpec extends AnyFunSuite {
       1706000000000L + i, s"k$i".getBytes, s"""{"n":$i}""".getBytes, Nil))
     KfsLayout.writeSegment(root, "t1", 0, recs2)
     Pipeline.run(spark, root, table, ckpt, cols,
-      format = Pipeline.IcebergV2, source = "kfs")
+      format = Pipeline.IcebergV2)
     val out = graft.etl.IcebergSink.read(spark, table)
     assert(out.count() == 80,
       "post-wipe records must land exactly once, pre-wipe rows must not double")
@@ -503,25 +503,34 @@ class EtlSpec extends AnyFunSuite {
     val table = Files.createTempDirectory("etl_kfs2t").toString + "/t"
     val ckpt = Files.createTempDirectory("etl_kfs2c").toString
 
-    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      source = "kfs")
+    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")))
     val out = TableSink.read(spark, table)
     assert(out.count() == 80)
     assert(out.agg(sum(col("n"))).collect().head.getLong(0) == (0 until 80).sum)
 
     // checkpointed replay adds nothing; an incremental segment drains
-    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      source = "kfs")
+    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")))
     assert(TableSink.read(spark, table).count() == 80)
     val more = (80 until 100).map(i => KfsCodec.Record(i.toLong,
       1706000100000L + i, s"k$i".getBytes, s"""{"n":$i}""".getBytes, Nil))
     KfsLayout.writeSegment(root, "t1", 0, more)
-    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      source = "kfs")
+    Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")))
     assert(TableSink.read(spark, table).count() == 100)
   }
 
-  test("pipeline with bounded micro-batches (maxFilesPerTrigger=1) drains all segments") {
+  test("pipeline rejects the removed whole-segment 'files' source") {
+    val root = Files.createTempDirectory("etl_files").toString
+    KfsLayout.writeSegment(root, "t1", 0, (0 until 10).map(i => KfsCodec.Record(
+      i.toLong, 1706000000000L + i, s"k$i".getBytes, s"""{"n":$i}""".getBytes, Nil)))
+    val table = Files.createTempDirectory("etl_files_t").toString + "/t"
+    val ckpt = Files.createTempDirectory("etl_files_c").toString
+    val e = intercept[IllegalArgumentException](
+      Pipeline.run(spark, root, table, ckpt, source = "files"))
+    assert(e.getMessage.contains("'files' path was removed"), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(table)), "nothing may land")
+  }
+
+  test("pipeline with bounded micro-batches (maxSegmentsPerTrigger=1) drains all segments") {
     val root = Files.createTempDirectory("etl_mb").toString
     (0 until 3).foreach { seg =>
       val recs = (0 until 50).map(i => KfsCodec.Record((seg * 50 + i).toLong,
@@ -532,7 +541,7 @@ class EtlSpec extends AnyFunSuite {
     val table = Files.createTempDirectory("etl_mb_tbl").toString + "/t"
     val ckpt = Files.createTempDirectory("etl_mb_ck").toString
     Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      maxFilesPerTrigger = Some(1)) // 3 separate micro-batches
+      maxSegmentsPerTrigger = Some(1)) // 3 separate micro-batches
     val out = TableSink.read(spark, table)
     assert(out.count() == 150)
     assert(out.agg(org.apache.spark.sql.functions.countDistinct(

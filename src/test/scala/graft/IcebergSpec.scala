@@ -693,7 +693,7 @@ class IcebergSpec extends AnyFunSuite {
     val table = tmpTable()
     val ckpt = Files.createTempDirectory("ice_ck").toString
     Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      maxFilesPerTrigger = Some(1), format = Pipeline.IcebergV2)
+      maxSegmentsPerTrigger = Some(1), format = Pipeline.IcebergV2)
     val m = IcebergSink.load(spark, table).get
     assert(m.snapshots.length == 3) // one per micro-batch
     assert(m.snapshots.map(_.sequenceNumber) == Seq(1L, 2L, 3L))
@@ -701,7 +701,7 @@ class IcebergSpec extends AnyFunSuite {
     assert(IcebergSink.statsRecordCount(spark, table) == 150)
     // rerun with the same checkpoint: no new snapshots, no duplicates
     Pipeline.run(spark, root, table, ckpt, Seq(SchemaCol("n", "long", "$.n")),
-      maxFilesPerTrigger = Some(1), format = Pipeline.IcebergV2)
+      maxSegmentsPerTrigger = Some(1), format = Pipeline.IcebergV2)
     val m2 = IcebergSink.load(spark, table).get
     assert(m2.snapshots.length == 3)
     assert(IcebergSink.read(spark, table).count() == 150)

@@ -122,6 +122,53 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sock.close()
   }
 
+  /** RowDescription body → the column names. */
+  private def rowDescNames(body: Array[Byte]): Seq[String] = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(body))
+    (0 until in.readShort()).map { _ =>
+      val name = Iterator.continually(in.readByte()).takeWhile(_ != 0).toArray
+      in.skipBytes(18) // table oid, attnum, type oid, typlen, typmod, format
+      new String(name, "UTF-8")
+    }
+  }
+
+  /** Parse, Bind `params` as text, Describe, Execute and Sync the unnamed
+    * statement; returns the result's column names. The default name of an
+    * un-aliased COUNT(json_value(...)) column echoes the json path, so it
+    * shows on the wire exactly what text was bound. */
+  private def boundColumns(q: String, params: String*): Seq[String] = {
+    var msgs: Seq[(Char, Array[Byte])] = Nil
+    withWire { (in, out, send) =>
+      val values = params.flatMap { v =>
+        val b = v.getBytes("UTF-8"); i32(b.length) ++ b
+      }.toArray
+      send('P', cstr("") ++ cstr(q) ++ i16(0))
+      send('B', cstr("") ++ cstr("") ++ i16(0) ++ i16(params.size) ++ values ++ i16(0))
+      send('D', 'P'.toByte +: cstr(""))
+      send('E', cstr("") ++ i32(0))
+      send('S', Array.emptyByteArray)
+      out.flush()
+      msgs = readUntilReady(in)
+    }
+    val desc = msgs.find(_._1 == 'T')
+    assert(desc.isDefined, "no RowDescription: " + msgs.map(m =>
+      if (m._1 == 'E') new String(m._2, "UTF-8").replace('\u0000', ' ') else m._1))
+    assert(dataRowValues(msgs.find(_._1 == 'D').get._2).head == "2")
+    rowDescNames(desc.get._2)
+  }
+
+  test("Bind leaves a $n inside a quoted literal as text") {
+    val cols = boundColumns("SELECT _partition, COUNT(json_value(_value, '$.k$1')) " +
+      "FROM events WHERE _partition = $1 GROUP BY _partition LAST 30d", "2")
+    assert(cols == Seq("_partition", "count_k$1"), s"got $cols")
+  }
+
+  test("Bind substitutes each placeholder once: a bound value holding $1 stays as sent") {
+    val cols = boundColumns("SELECT _partition, COUNT(json_value(_value, $2)) " +
+      "FROM events WHERE _partition = $1 GROUP BY _partition LAST 30d", "2", "$.k$1")
+    assert(cols == Seq("_partition", "count_k$1"), s"got $cols")
+  }
+
   /** Open a socket, run the startup handshake, hand (in, out, send) to f. */
   private def withWire(f: (java.io.DataInputStream, java.io.DataOutputStream,
       (Char, Array[Byte]) => Unit) => Unit): Unit =
