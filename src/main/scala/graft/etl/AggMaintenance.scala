@@ -111,12 +111,7 @@ object AggMaintenance {
       keyCols: Seq[String],
       valueCol: Column,
       maxSegmentsPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
-    maxSegmentsPerTrigger.foreach(n =>
-      reader.option("max_segments_per_trigger", n.toString))
-    val decoded = reader.load().select(col("_topic"), col("_partition"),
-      col("_offset"), col("_ts_ms"), col("_key"), col("_value"), col("_headers"))
-    val query = decoded.writeStream
+    val query = Pipeline.logStream(spark, kfsRoot, maxSegmentsPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -66,7 +66,7 @@ object Pipeline {
   /** The decoded log record stream every lane reads: the seven log
     * columns from the DSv2 `kfs` source, at most `maxSegmentsPerTrigger`
     * segments per micro-batch. */
-  private def logStream(spark: SparkSession, kfsRoot: String,
+  private[etl] def logStream(spark: SparkSession, kfsRoot: String,
       maxSegmentsPerTrigger: Option[Int]): DataFrame = {
     val reader = spark.readStream.format("kfs").option("path", kfsRoot)
     maxSegmentsPerTrigger.foreach(n =>
@@ -111,7 +111,7 @@ object Pipeline {
     * per poll tick; this is the source's admission-control knob for the
     * same effect). `source` must be `"kfs"`, the only ingest path; the
     * parameter stays for callers that still name it. A checkpoint left by
-    * the removed whole-segment `"files"` path cannot be resumed: start a
+    * the removed whole-segment `files` path cannot be resumed: start a
     * fresh one and the sink's offset-dedup keeps the rerun idempotent. */
   def run(
       spark: SparkSession,

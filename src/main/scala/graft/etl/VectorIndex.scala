@@ -30,10 +30,8 @@ object VectorIndex {
       planes: Int = 4,
       dims: Int = 16,
       maxSegmentsPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
-    maxSegmentsPerTrigger.foreach(n =>
-      reader.option("max_segments_per_trigger", n.toString))
-    val decoded = reader.load().select(col("_offset"))
+    val decoded = Pipeline.logStream(spark, kfsRoot, maxSegmentsPerTrigger)
+      .select(col("_offset"))
     val query = decoded.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -100,10 +98,8 @@ object VectorIndex {
         * crosses the bound. Replay-safe: compaction changes no code
         * row, and a crash mid-swap recovers on the next pass. */
       maxFilesPerCell: Option[Int] = None): Unit = {
-    val reader = spark.readStream.format("kfs").option("path", kfsRoot)
-    maxSegmentsPerTrigger.foreach(n =>
-      reader.option("max_segments_per_trigger", n.toString))
-    val decoded = reader.load().select(col("_offset"))
+    val decoded = Pipeline.logStream(spark, kfsRoot, maxSegmentsPerTrigger)
+      .select(col("_offset"))
     // the model is FROZEN for the lane's lifetime (this method's
     // contract), so load it once on the first non-empty batch and reuse —
     // re-loading per append costs three parquet-read+collect jobs per
