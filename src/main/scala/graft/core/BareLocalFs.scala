@@ -1,5 +1,8 @@
 package graft.core
 
+import java.nio.file.{FileAlreadyExistsException, Files, LinkOption, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -47,19 +50,45 @@ object BareLocalFs {
     * — the Spark tuning guide's own advice: "on a fast, local disk in
     * your system"). Every tiny local shuffle pays per-file open/close on
     * the scratch FS — the bypass writer stages maps × reducers block
-    * files — and on this sandbox's ext4 root that tax measured ~9 ms per
+    * files — and on an ext4 root that tax measured ~9 ms per
     * (map task, reducer): a 32×32 SQL shuffle of 256 K rows spent 12.1 s
     * of task time on it (3.5 s on tmpfs). Order: explicit override
-    * (`SPARK_GRAFT_LOCAL_DIR`), else a RAM-backed `/dev/shm` when present
-    * and writable (single-machine scratch only — an estate keeps shuffle
-    * on its NVMe array: capacity, not latency, bounds it there), else
-    * None (Spark's default `java.io.tmpdir`). Honors an operator's
-    * `SPARK_LOCAL_DIRS` by deferring: Spark reads that env var ahead of
-    * `spark.local.dir`, so setting the conf never overrides it. */
+    * (`SPARK_GRAFT_LOCAL_DIR`), else this user's own directory on a
+    * RAM-backed `/dev/shm` ([[ownedScratch]]; single-machine scratch only
+    * — an estate keeps shuffle on its NVMe array: capacity, not latency,
+    * bounds it there), else None (Spark's default `java.io.tmpdir`).
+    * Honors an operator's `SPARK_LOCAL_DIRS` by deferring: Spark reads
+    * that env var ahead of `spark.local.dir`, so setting the conf never
+    * overrides it. */
   private def scratchDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty).orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-scratch")
-      else None
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty)
+      .orElse(currentUid.flatMap(ownedScratch(Paths.get("/dev/shm"), _)))
+
+  /** The process's numeric user id; None off Unix. */
+  private[graft] def currentUid: Option[Long] =
+    try Some(new com.sun.security.auth.module.UnixSystem().getUid)
+    catch { case _: LinkageError | _: UnsupportedOperationException => None }
+
+  /** `<shm>/graft-scratch-<uid>`, created owner-only when absent, and
+    * used only when `uid` owns it: on a shared host a same-named entry
+    * another user planted (a directory or a symlink) is never written
+    * into. None when `shm` is not a writable directory. */
+  private[graft] def ownedScratch(shm: java.nio.file.Path,
+      uid: Long): Option[String] =
+    if (!Files.isDirectory(shm) || !Files.isWritable(shm)) None
+    else {
+      val dir = shm.resolve(s"graft-scratch-$uid")
+      try {
+        try Files.createDirectory(dir, PosixFilePermissions.asFileAttribute(
+          PosixFilePermissions.fromString("rwx------")))
+        catch { case _: FileAlreadyExistsException => () }
+        val owner = Files.getAttribute(dir, "unix:uid", LinkOption.NOFOLLOW_LINKS)
+          .asInstanceOf[Integer].longValue
+        if (Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS) && owner == uid)
+          Some(dir.toString)
+        else None
+      } catch {
+        case _: java.io.IOException | _: UnsupportedOperationException => None
+      }
     }
 }

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
 
 import graft.kafsql.{SchemaCol, TopicRegistry}
 
@@ -40,10 +41,12 @@ object Pipeline {
     * only increments an `invalid` metric): invalid records land in a
     * DEAD-LETTER table — the seven decoded log columns plus `missing`,
     * the comma-joined required columns that failed to extract — instead
-    * of vanishing. The DLQ append rides the same log-coordinate
-    * offset-dedup as the main sink, so crash-replays never double a
-    * quarantined record, and re-ingesting a fixed payload later is a
-    * plain re-produce. */
+    * of vanishing. Crash-replays never double a quarantined record: under
+    * a checkpointed run each batch's DLQ files are tagged with the
+    * checkpoint's identity and batch id, so a replay replaces its own
+    * files (the DLQ twin of the main sink's snapshot txn markers); any
+    * other DLQ falls back to the main sink's log-coordinate offset-dedup.
+    * Re-ingesting a fixed payload later is a plain re-produce. */
   final case class DeadLetter(dlqPath: String) extends Validation
 
   /** Sink table format: plain parquet directory ([[TableSink]]) or the
@@ -57,11 +60,6 @@ object Pipeline {
 
   final class ValidationException(n: Long)
     extends RuntimeException(s"strict validation failed: $n invalid records")
-
-  def validityColumn(schemaCols: Seq[SchemaCol]): Column =
-    if (schemaCols.isEmpty) lit(true)
-    else schemaCols.map(sc => TopicRegistry.extract(col("_value"), sc).isNotNull)
-      .reduce(_ && _)
 
   /** The decoded log record stream every lane reads: the seven log
     * columns from the DSv2 `kfs` source, at most `maxSegmentsPerTrigger`
@@ -374,7 +372,17 @@ object Pipeline {
     query.awaitTermination()
   }
 
-  /** One micro-batch: validate → extract → offset-dedup → append.
+  /** One micro-batch: extract + validate → dead-letter split →
+    * offset-dedup → append.
+    *
+    * The batch is materialized ONCE, as the base fields plus the extracted
+    * `schemaCols` plus `_valid`. Validity reads the extracted columns, so
+    * each JSON path is parsed once per record; a `validateCols` entry that
+    * is not a sink column is extracted on its own. The dead-letter rows,
+    * the main rows and the strict count are all projections of that one
+    * cache. A second cache is taken only where a derived frame is consumed
+    * twice: after an offset anti-join, and for the parquet-dir sink's
+    * emptiness gate.
     *
     * `txn = Some((walKey, batchId))` turns on EXACTLY-ONCE VIA SNAPSHOT
     * SUMMARY for the Iceberg sink (the recipe Iceberg's own Spark
@@ -387,7 +395,10 @@ object Pipeline {
     * replays are impossible below the committed id, so the guard is
     * redundant. A table with commits from OTHER writers/checkpoints falls
     * back to the anti-join: cross-checkpoint reruns stay idempotent
-    * (EtlSpec pins that law). */
+    * (EtlSpec pins that law). With a [[DeadLetter]] the same txn tags the
+    * quarantine's files ([[dlqAppend]]), and the Iceberg commit's summary
+    * carries the batch's quarantined-record count as
+    * `graft.dead-letter-records`. */
   def sinkBatch(spark: SparkSession, batch0: DataFrame, tablePath: String,
       schemaCols: Seq[SchemaCol], validation: Validation,
       validateCols: Option[Seq[SchemaCol]] = None,
@@ -395,9 +406,10 @@ object Pipeline {
       txn: Option[(String, Long)] = None): Unit = {
     // the replay probe is METADATA-ONLY — run it before caching the batch
     // so a pure replay costs zero Spark jobs
+    lazy val meta = IcebergSink.load(spark, tablePath)
     val txnState = (txn, format) match {
       case (Some((key, bid)), IcebergV2) =>
-        IcebergSink.load(spark, tablePath) match {
+        meta match {
           case None => Some((false, true, key, bid))
           case Some(m) =>
             val ours = m.snapshots.filter(
@@ -410,23 +422,94 @@ object Pipeline {
       case _ => None
     }
     if (txnState.exists(_._1)) return // committed batch: pure replay
+    val vc = validateCols.getOrElse(schemaCols)
+    def extracted(sc: SchemaCol): Column =
+      if (schemaCols.contains(sc)) col(sc.name)
+      else TopicRegistry.extract(col("value"), sc)
+    val validity =
+      if (validation == Off || vc.isEmpty) lit(true)
+      else vc.map(extracted(_).isNotNull).reduce(_ && _)
     // a foreachBatch frame is NOT materialized: every action below would
-    // re-run the upstream segment decode (3x per batch measured) — cache
+    // re-run the upstream segment decode and the JSON extraction — cache
     // for the duration of the sink, release before returning. Batch size
     // is bounded by the trigger's admission control, so the footprint is.
-    val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try sinkBatchInner(spark, batch, tablePath, schemaCols, validation,
-      validateCols, format,
-      skipDedup = txnState.exists(_._2),
-      stamp = txnState.map(t => Map(
-        TxnKeyProp -> t._3, TxnBatchProp -> t._4.toString))
-        .getOrElse(Map.empty))
-    finally batch.unpersist()
+    // Extracted columns follow the base fields (iceberg.go:889-900).
+    val batch = schemaCols.foldLeft(TableSink.withBaseFields(batch0)) {
+        (df, sc) => df.withColumn(sc.name, TopicRegistry.extract(col("value"), sc))
+      }.withColumn("_valid", validity)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (valid, quarantined) = validation match {
+        case Off => (batch, None)
+        case Lenient => (batch.filter(col("_valid")), None)
+        case Strict =>
+          val bad = batch.filter(!col("_valid")).count()
+          if (bad > 0) throw new ValidationException(bad)
+          (batch, None)
+        case dl: DeadLetter =>
+          // which required columns failed, as a stable comma-joined list
+          val missing = concat_ws(",", filter(array(vc.map(sc =>
+            when(extracted(sc).isNull, lit(sc.name))
+              .otherwise(lit(null).cast("string"))): _*), x => x.isNotNull))
+          val bad = batch.filter(!col("_valid")).select(
+            TableSink.BaseFields.map(f => col(f._1)) :+ missing.as("missing"): _*)
+          (batch.filter(col("_valid")), Some(dlqAppend(spark, dl.dlqPath, bad,
+            txn.filter(_ => format == IcebergV2))))
+      }
+      val rows = valid.drop("_valid")
+
+      // idempotent replay (dropLanded). Table emptiness from METADATA where
+      // the format has it (an isEmpty on the table frame is a scan job per
+      // micro-batch)
+      val tableIsEmpty = format match {
+        case IcebergV2 => meta.flatMap(_.currentSnapshotId).isEmpty
+        case ParquetDir => TableSink.read(spark, tablePath).isEmpty
+      }
+      // no anti-join when the txn markers prove every commit is ours with
+      // a smaller batch id — a replayed record below that is impossible, so
+      // the range probe + anti-join (2 jobs + a table read per batch) are
+      // redundant
+      val antiJoin = !(tableIsEmpty || txnState.exists(_._2))
+      val deduped =
+        if (!antiJoin) rows
+        else dropLanded(rows, format match {
+          case ParquetDir => TableSink.read(spark, tablePath)
+          case IcebergV2 => IcebergSink.read(spark, tablePath)
+        })
+      // materialize the anti-join ONCE (the append's range sample and its
+      // write would each re-run it), and the parquet-dir frame that both
+      // the emptiness gate and the append read; a plain projection of the
+      // batch cache needs no cache of its own
+      val twice = antiJoin || format == ParquetDir
+      val ded = if (twice) deduped.persist(StorageLevel.MEMORY_AND_DISK) else deduped
+      try format match {
+        case ParquetDir => if (!ded.isEmpty) TableSink.append(spark, tablePath, ded)
+        case IcebergV2 =>
+          // cluster each commit's files by the log partition: tight manifest
+          // bounds make later partition-scoped reads (readPruned) skip files
+          // — the unpartitioned-spec analog of identity partition pruning.
+          // No isEmpty probe: append itself skips the commit on zero rows,
+          // so the write IS the batch's only materializing job
+          IcebergSink.append(spark, tablePath, ded, clusterBy = Seq("partition"),
+            extraSummary = txnState.fold(Map.empty[String, String])(t =>
+              Map(TxnKeyProp -> t._3, TxnBatchProp -> t._4.toString)) ++
+              quarantined.map(n => DeadLetterRecordsProp -> n.toString))
+      } finally if (twice) ded.unpersist()
+    } finally batch.unpersist()
   }
 
   /** Snapshot-summary txn marker keys (the sink's WAL identity). */
   private[etl] val TxnKeyProp = "graft.wal-key"
   private[etl] val TxnBatchProp = "graft.wal-batch"
+  /** Snapshot-summary key: records the commit's batch quarantined. */
+  private[etl] val DeadLetterRecordsProp = "graft.dead-letter-records"
+
+  /** A walKey's dead-letter file tag: the first 12 hex digits of its
+    * SHA-1 (never a prefix of Spark's own `part-` file names). */
+  private def walTag(walKey: String): String =
+    java.security.MessageDigest.getInstance("SHA-1")
+      .digest(walKey.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(6).map(b => f"${b & 0xff}%02x").mkString
 
   /** Idempotent replay: drop the `rows` whose log coordinates
     * (topic, partition, offset) are already in `existing`. The reference
@@ -444,80 +527,30 @@ object Pipeline {
       Seq("topic", "partition", "offset"), "left_anti")
   }
 
-  /** Append quarantined rows to the dead-letter table behind the same
-    * log-coordinate offset-dedup as the main sink: a crash-replayed batch
-    * re-derives the same DLQ rows and anti-joins them away. */
+  /** Append quarantined rows to the dead-letter table; returns how many
+    * landed. Two idempotence paths, the twins of the main sink's txn
+    * markers and offset anti-join:
+    *   - `txn = Some((walKey, batchId))` and every file of the table
+    *     carries this walKey's [[walTag]]: [[TableSink.appendTagged]]
+    *     lands the rows as `data/<tag>-<batchId>-<i>.parquet`, replacing
+    *     whatever an earlier attempt of the same batch left — one write
+    *     job, no read of the table.
+    *   - otherwise (no txn, foreign or untagged files after a wiped
+    *     checkpoint or [[TableSink.compact]], a schema promotion): the
+    *     log-coordinate offset-dedup — a crash-replayed batch re-derives
+    *     the same DLQ rows and anti-joins them away. */
   private def dlqAppend(spark: SparkSession, dlqPath: String,
-      rows: DataFrame): Unit = {
-    val existing = TableSink.read(spark, dlqPath)
-    val fresh = if (existing.isEmpty) rows else dropLanded(rows, existing)
-    val f = fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (!f.isEmpty) TableSink.append(spark, dlqPath, f)
-    finally f.unpersist()
-  }
-
-  private def sinkBatchInner(spark: SparkSession, batch: DataFrame,
-      tablePath: String, schemaCols: Seq[SchemaCol], validation: Validation,
-      validateCols: Option[Seq[SchemaCol]], format: SinkFormat,
-      skipDedup: Boolean = false,
-      stamp: Map[String, String] = Map.empty): Unit = {
-    val withValid = batch.withColumn("_valid",
-      validityColumn(validateCols.getOrElse(schemaCols)))
-    val valid = validation match {
-      case Off => withValid
-      case Lenient => withValid.filter(col("_valid"))
-      case Strict =>
-        val bad = withValid.filter(!col("_valid")).count()
-        if (bad > 0) throw new ValidationException(bad)
-        withValid
-      case dl: DeadLetter =>
-        val vc = validateCols.getOrElse(schemaCols)
-        val badBase = TableSink.withBaseFields(
-          withValid.filter(!col("_valid")).drop("_valid"))
-        // which required columns failed, as a stable comma-joined list
-        val reasons = concat_ws(",", filter(array(vc.map(sc =>
-          when(TopicRegistry.extract(col("value"), sc).isNull, lit(sc.name))
-            .otherwise(lit(null).cast("string"))): _*), x => x.isNotNull))
-        dlqAppend(spark, dl.dlqPath, badBase.withColumn("missing", reasons))
-        withValid.filter(col("_valid"))
+      rows: DataFrame, txn: Option[(String, Long)]): Long =
+    txn.flatMap { case (key, bid) =>
+      TableSink.appendTagged(spark, dlqPath, rows, walTag(key), bid)
+    }.getOrElse {
+      val existing = TableSink.read(spark, dlqPath)
+      val fresh = if (existing.isEmpty) rows else dropLanded(rows, existing)
+      val f = fresh.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = f.count()
+        if (n > 0) TableSink.append(spark, dlqPath, f)
+        n
+      } finally f.unpersist()
     }
-    val rows = TableSink.withBaseFields(valid.drop("_valid"))
-    // extracted columns appended after the base fields (iceberg.go:889-900)
-    val withExtras = schemaCols.foldLeft(rows) { (df, sc) =>
-      df.withColumn(sc.name, TopicRegistry.extract(col("value"), sc))
-    }
-
-    // idempotent replay (dropLanded). Table emptiness from METADATA where
-    // the format has it (an isEmpty on the table frame is a scan job per
-    // micro-batch)
-    val tableIsEmpty = format match {
-      case IcebergV2 =>
-        IcebergSink.load(spark, tablePath).flatMap(_.currentSnapshotId).isEmpty
-      case ParquetDir => TableSink.read(spark, tablePath).isEmpty
-    }
-    val deduped =
-      // skipDedup: the txn markers prove every commit is ours with a
-      // smaller batch id — a replayed record below that is impossible, so
-      // the range probe + anti-join (2 jobs + a table read per batch) are
-      // redundant
-      if (tableIsEmpty || skipDedup) withExtras
-      else dropLanded(withExtras, format match {
-        case ParquetDir => TableSink.read(spark, tablePath)
-        case IcebergV2 => IcebergSink.read(spark, tablePath)
-      })
-    // materialize the dedup ONCE: the emptiness gate and the append would
-    // otherwise each run the decode + anti-join
-    val ded = deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try format match {
-      case ParquetDir => if (!ded.isEmpty) TableSink.append(spark, tablePath, ded)
-      case IcebergV2 =>
-        // cluster each commit's files by the log partition: tight manifest
-        // bounds make later partition-scoped reads (readPruned) skip files
-        // — the unpartitioned-spec analog of identity partition pruning.
-        // No isEmpty probe: append itself skips the commit on zero rows,
-        // so the write IS the batch's only materializing job
-        IcebergSink.append(spark, tablePath, ded, clusterBy = Seq("partition"),
-          extraSummary = stamp)
-    } finally ded.unpersist()
-  }
 }

@@ -141,6 +141,55 @@ object TableSink {
     Files.write(schemaPath(table), target.json.getBytes(StandardCharsets.UTF_8))
   }
 
+  /** Batch-tagged append: the idempotent append of a writer whose batches
+    * carry a stable `(tag, batchId)`. The rows are written to
+    * `_staging_<tag>`; zero-row files are dropped by their footer count;
+    * any `data/<tag>-<batchId>-*` files an earlier attempt of the same
+    * batch left are deleted; the staged files are then renamed to
+    * `data/<tag>-<batchId>-<i>.parquet`. A replay therefore replaces its
+    * own files instead of adding to them, for one write job and no read.
+    * The schema sidecar is written only when rows landed.
+    *
+    * Returns the number of rows landed, or None — having run nothing —
+    * when the protocol cannot prove idempotence: a file under `data/`
+    * without this tag (another writer's, an untagged [[append]], a
+    * [[compact]] rewrite) or a type promotion, which rewrites stored
+    * files. The caller then falls back to an offset-dedup [[append]]. */
+  def appendTagged(spark: SparkSession, table: String, df: DataFrame,
+      tag: String, batchId: Long): Option[Long] = lockFor(table).synchronized {
+    recoverSwap(table)
+    val dataDir = Paths.get(table, "data")
+    val files = parquetFiles(dataDir)
+    val current = tableSchema(table)
+    val target = current.fold(df.schema)(evolve(_, df.schema))
+    val promoted = current.exists(t => t.fields.exists(f =>
+      target(f.name).dataType != f.dataType))
+    if (promoted || files.exists(!_.getFileName.toString.startsWith(s"$tag-")))
+      None
+    else {
+      val staging = Paths.get(table, s"_staging_$tag")
+      conform(df, target).write.mode("overwrite").parquet(staging.toString)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val staged = parquetFiles(staging).sorted.map { p =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.toUri), conf))
+        try p -> r.getRecordCount finally r.close()
+      }.filter(_._2 > 0)
+      val prefix = s"$tag-$batchId-"
+      files.filter(_.getFileName.toString.startsWith(prefix)).foreach(Files.delete)
+      if (staged.nonEmpty) {
+        Files.createDirectories(dataDir)
+        staged.zipWithIndex.foreach { case ((p, _), i) =>
+          Files.move(p, dataDir.resolve(f"$prefix$i%05d.parquet"))
+        }
+        Files.write(schemaPath(table), target.json.getBytes(StandardCharsets.UTF_8))
+      }
+      deleteRecursive(staging)
+      Some(staged.map(_._2).sum)
+    }
+  }
+
   /** Project/cast a frame onto the target schema (missing cols → NULL). */
   private def conform(df: DataFrame, target: StructType): DataFrame = {
     val cols = target.fields.map { f =>

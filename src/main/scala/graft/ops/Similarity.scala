@@ -549,9 +549,11 @@ object Similarity {
     * independent jobs; actions are only sequential because driver code
     * calls them sequentially). Each thunk gets the caller's session set
     * active on its pool thread (conf/FS helpers read it thread-locally).
-    * Returns results in input order; rethrows the first failure. */
-  private def runConcurrently[T](spark: org.apache.spark.sql.SparkSession,
-      thunks: Seq[() => T]): Seq[T] = {
+    * Returns results in input order (Nil for no thunks); rethrows the
+    * first failure in input order as the thunk threw it, not wrapped in
+    * the pool's `ExecutionException`. */
+  private[graft] def runConcurrently[T](spark: org.apache.spark.sql.SparkSession,
+      thunks: Seq[() => T]): Seq[T] = if (thunks.isEmpty) Nil else {
     import scala.jdk.CollectionConverters._
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
     try pool.invokeAll(thunks.map(t =>
@@ -560,7 +562,10 @@ object Similarity {
             org.apache.spark.sql.SparkSession.setActiveSession(spark)
             t()
           }
-        }).asJava).asScala.map(_.get()).toSeq
+        }).asJava).asScala.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }.toSeq
     finally pool.shutdown()
   }
 

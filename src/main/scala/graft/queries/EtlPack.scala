@@ -74,9 +74,10 @@ object EtlPack extends QueryPack {
     // extract land in a quarantine table with the failing column names,
     // instead of vanishing behind a metric. Both sides of the split are
     // hash-checked — landed rows keep their payload aggregates, DLQ rows
-    // keep their log coordinates and reason — and the DLQ append rides
-    // the same offset-dedup as the main sink (crash-replays never double
-    // a quarantined record; EtlSpec pins that law).
+    // keep their log coordinates and reason. Crash-replays never double
+    // a quarantined record: this parquet-dir lane's DLQ append rides the
+    // main sink's offset-dedup, and an Iceberg lane's replaces its own
+    // batch-tagged files (EtlSpec pins both laws).
     QueryDef(
       "e27_pipeline_dlq",
       (s, dir) => {

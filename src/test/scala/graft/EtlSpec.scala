@@ -130,6 +130,151 @@ class EtlSpec extends AnyFunSuite {
     assert(TableSink.read(spark, dlq).count() == 10)
   }
 
+  // ---- dead-letter on the Iceberg sink: one cached pass, tagged files ----
+
+  private def logBatch(offs: Seq[Long], broken: Long => Boolean) = {
+    import spark.implicits._
+    offs.map(o => ("t", 0, o, 1L, "k",
+      if (broken(o)) "broken" else s"""{"n":$o}""", Map.empty[String, String]))
+      .toDF("_topic", "_partition", "_offset", "_ts_ms", "_key", "_value", "_headers")
+  }
+  private val nCol = Seq(SchemaCol("n", "long", "$.n"))
+  private def dlqSink(table: String, dlq: String, offs: Seq[Long],
+      broken: Long => Boolean, txn: (String, Long)): Unit =
+    Pipeline.sinkBatch(spark, logBatch(offs, broken), table, nCol,
+      Pipeline.DeadLetter(dlq), format = Pipeline.IcebergV2, txn = Some(txn))
+  private def dlqFiles(dlq: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val d = java.nio.file.Paths.get(dlq, "data")
+    if (!Files.exists(d)) Nil
+    else Files.list(d).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+  }
+
+  /** Spark jobs `body` starts under the streaming query whose checkpoint
+    * is `ckpt` (its id is read from the checkpoint after `body`). A
+    * sentinel job marks the end of the listener bus backlog. */
+  private def streamJobs(ckpt: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sentinel = "etlspec-sentinel-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val byQuery = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(x => sentinel == x.getProperty("spark.job.description")))
+          seen.countDown()
+        else p.flatMap(x => Option(x.getProperty("sql.streaming.queryId")))
+          .foreach(id => byQuery.merge(id, 1, (a, b) => a + b))
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val meta = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(ckpt, "metadata")), "UTF-8")
+      val id = """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(meta).get.group(1)
+      Option(byQuery.get(id)).map(_.intValue).getOrElse(0)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("dead-letter Iceberg commit runs at most 4 Spark jobs per micro-batch") {
+    val root = Files.createTempDirectory("etl_jobs_kfs").toString
+    def segment(from: Int, until: Int): Unit =
+      KfsLayout.writeSegment(root, "t1", 0, (from until until).map { i =>
+        val payload = if (i % 5 == 0) "broken" else s"""{"n":$i}"""
+        KfsCodec.Record(i.toLong, 1706000000000L + i, s"k$i".getBytes,
+          payload.getBytes, Nil)
+      })
+    val table = Files.createTempDirectory("etl_jobs_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_jobs_q").toString + "/q"
+    val ckpt = Files.createTempDirectory("etl_jobs_ck").toString
+    def drain(): Unit = Pipeline.run(spark, root, table, ckpt, nCol,
+      Pipeline.DeadLetter(dlq), format = Pipeline.IcebergV2)
+    segment(0, 100)
+    drain() // creates both tables
+    segment(100, 200) // one segment: one micro-batch
+    val jobs = streamJobs(ckpt)(drain())
+    assert(IcebergSink.read(spark, table).count() == 160)
+    assert(TableSink.read(spark, dlq).count() == 40)
+    info(s"$jobs Spark jobs")
+    assert(jobs <= 4, s"one dead-letter micro-batch ran $jobs Spark jobs")
+  }
+
+  test("dead-letter tags: an all-invalid batch commits nothing; its replay doubles nothing") {
+    val table = Files.createTempDirectory("etl_tag_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_tag_q").toString + "/q"
+    dlqSink(table, dlq, 0L until 5L, _ => true, ("ckA", 0L))
+    assert(IcebergSink.load(spark, table).flatMap(_.currentSnapshotId).isEmpty,
+      "an all-invalid batch must make no main commit")
+    assert(TableSink.read(spark, dlq).count() == 5)
+    val tag = dlqFiles(dlq).map(_.takeWhile(_ != '-')).distinct
+    assert(tag.size == 1 && dlqFiles(dlq).forall(_.startsWith(s"${tag.head}-0-")))
+    // no main commit means no txn marker: the replay runs the sink again
+    dlqSink(table, dlq, 0L until 5L, _ => true, ("ckA", 0L))
+    assert(TableSink.read(spark, dlq).count() == 5)
+  }
+
+  test("dead-letter tags: a re-run of a tagged batch replaces its files") {
+    val table = Files.createTempDirectory("etl_tagre_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_tagre_q").toString + "/q"
+    def offsets = TableSink.read(spark, dlq).collect().map(_.getAs[Long]("offset")).toSet
+    dlqSink(table, dlq, 0L until 5L, _ => true, ("ckA", 0L))
+    dlqSink(table, dlq, 5L until 7L, _ => true, ("ckA", 1L))
+    assert(offsets == (0L until 7L).toSet)
+    // an attempt of batch 0 that quarantines fewer rows REPLACES batch 0's
+    // files (an additive append would keep 0..4 and add 0..2 again)
+    dlqSink(table, dlq, 0L until 3L, _ => true, ("ckA", 0L))
+    assert(TableSink.read(spark, dlq).count() == 5)
+    assert(offsets == Set(0L, 1L, 2L, 5L, 6L), "batch 1's files are untouched")
+  }
+
+  test("dead-letter tags: a fresh walKey falls back to the anti-join, new records land") {
+    val table = Files.createTempDirectory("etl_tagfk_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_tagfk_q").toString + "/q"
+    dlqSink(table, dlq, 0L until 10L, _ % 2 == 0, ("ckA", 0L))
+    assert(TableSink.read(spark, dlq).count() == 5)
+    // a wiped checkpoint re-derives the same records under a new key
+    dlqSink(table, dlq, 0L until 10L, _ % 2 == 0, ("ckB", 0L))
+    assert(TableSink.read(spark, dlq).count() == 5, "a foreign-tagged DLQ must not double")
+    assert(IcebergSink.read(spark, table).count() == 5)
+    dlqSink(table, dlq, 10L until 14L, _ % 2 == 0, ("ckB", 1L))
+    assert(TableSink.read(spark, dlq).count() == 7)
+    assert(IcebergSink.read(spark, table).count() == 7)
+  }
+
+  test("dead-letter tags: a DLQ compacted to untagged files still dedups") {
+    val table = Files.createTempDirectory("etl_tagcp_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_tagcp_q").toString + "/q"
+    dlqSink(table, dlq, 0L until 4L, _ => true, ("ckA", 0L))
+    dlqSink(table, dlq, 4L until 8L, _ => true, ("ckA", 1L))
+    val (before, after) = TableSink.compact(spark, dlq)
+    assert(before > after && after == 1)
+    assert(dlqFiles(dlq).forall(_.startsWith("part-")))
+    // the replay's tagged files are gone into the compacted file: only
+    // the offset anti-join can tell these rows already landed
+    dlqSink(table, dlq, 4L until 8L, _ => true, ("ckA", 1L))
+    assert(TableSink.read(spark, dlq).count() == 8)
+  }
+
+  test("dead-letter count is stamped into the batch's Iceberg commit") {
+    val table = Files.createTempDirectory("etl_tagct_tbl").toString + "/t"
+    val dlq = Files.createTempDirectory("etl_tagct_q").toString + "/q"
+    def stamped = IcebergSink.load(spark, table).get.snapshots
+      .map(_.summary.get("graft.dead-letter-records"))
+    def dlqRows = TableSink.read(spark, dlq).count()
+    dlqSink(table, dlq, 0L until 10L, _ % 4 == 0, ("ckA", 0L))
+    assert(dlqRows == 3 && stamped == Seq(Some("3")))
+    dlqSink(table, dlq, 10L until 20L, _ == 15L, ("ckA", 1L))
+    assert(dlqRows == 4 && stamped == Seq(Some("3"), Some("1")))
+    dlqSink(table, dlq, 20L until 25L, _ => false, ("ckA", 2L))
+    assert(dlqRows == 4 && stamped.last.contains("0"))
+  }
+
   // ---- registry-driven sink schema (iceberg.go:779-828) ------------------
 
   test("registry schema doc derives sorted, mapped, required-aware columns") {

@@ -159,6 +159,17 @@ class OpsSpec extends AnyFunSuite {
     assert(atOrAbove == kept)
   }
 
+  test("runConcurrently rethrows a thunk's own exception, unwrapped") {
+    val boom = new IllegalStateException("boom")
+    val thrown = intercept[Throwable](Similarity.runConcurrently[Int](spark,
+      Seq(() => 1, () => throw boom)))
+    assert(thrown eq boom)
+  }
+
+  test("runConcurrently of no thunks is Nil") {
+    assert(Similarity.runConcurrently[Int](spark, Nil) == Nil)
+  }
+
   test("MMR: lambda=1 is pure relevance; diversity skips the duplicate") {
     import spark.implicits._
     def vec(x: Float, y: Float) = Array.fill(64)(0f)
