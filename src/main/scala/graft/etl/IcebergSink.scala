@@ -32,7 +32,8 @@ import graft.kfs.KfsLayout
   *     manifest_entry records, data_file struct ids 100-104/134) with
   *     per-file record counts read from the parquet footers
   *   - `metadata/version-hint.text`: the Hadoop-catalog current-version
-  *     pointer
+  *     pointer — a best-effort cache, deleted and re-created on each commit
+  *     (never truncated in place); [[load]] probes past it
   *   - OPTIMISTIC COMMITS: the new metadata version is claimed by atomic
   *     rename; a loser re-reads the current metadata, re-bases its
   *     snapshot (fresh ids/sequence number, parent = winner's snapshot)
@@ -345,6 +346,21 @@ object IcebergSink {
     if (!f.exists(versionFile(table, v))) return None
     while (f.exists(versionFile(table, v + 1))) v += 1
     Some(parseMeta(readString(f, versionFile(table, v)), v))
+  }
+
+  /** Point `version-hint.text` at a just-claimed version. The hint is a
+    * best-effort cache ([[load]] probes past it, and falls back to v1 plus
+    * the forward probe when it is absent), so it is deleted and created
+    * fresh rather than truncated in place: on ext4 rewriting an existing
+    * file through `O_TRUNC` makes the kernel flush the new data at close
+    * (`auto_da_alloc`), stalling the commit for tens of milliseconds, while
+    * unlink + create costs a fraction of one. */
+  private def writeVersionHint(f: FileSystem, table: String, version: Int): Unit = {
+    val hint = new HPath(metadataDir(table), "version-hint.text")
+    f.delete(hint, false)
+    val out = f.create(hint, true)
+    try out.write(version.toString.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   private def readString(f: FileSystem, p: HPath): String = {
@@ -2370,10 +2386,7 @@ object IcebergSink {
       finally out.close()
       val dest = versionFile(table, newVersion)
       if (!f.exists(dest) && f.rename(tmp, dest)) {
-        // best-effort pointer cache; readers probe past it anyway
-        val hint = f.create(new HPath(metadataDir(table), "version-hint.text"), true)
-        try hint.write(newVersion.toString.getBytes(StandardCharsets.UTF_8))
-        finally hint.close()
+        writeVersionHint(f, table, newVersion)
         committed = true
       } else {
         f.delete(tmp, false)
@@ -2488,10 +2501,7 @@ object IcebergSink {
           finally out.close()
           val dest = versionFile(table, next.version)
           if (!f.exists(dest) && f.rename(tmp, dest)) {
-            val hint = f.create(
-              new HPath(metadataDir(table), "version-hint.text"), true)
-            try hint.write(next.version.toString.getBytes(StandardCharsets.UTF_8))
-            finally hint.close()
+            writeVersionHint(f, table, next.version)
             return
           } else f.delete(tmp, false)
       }
@@ -2653,9 +2663,7 @@ object IcebergSink {
       finally out.close()
       val dest = versionFile(table, next.version)
       if (!f.exists(dest) && f.rename(tmp, dest)) {
-        val hint = f.create(new HPath(metadataDir(table), "version-hint.text"), true)
-        try hint.write(next.version.toString.getBytes(StandardCharsets.UTF_8))
-        finally hint.close()
+        writeVersionHint(f, table, next.version)
         committed = true
         // physical cleanup only AFTER the metadata no longer references
         // any of it (a crash between commit and deletes leaves orphans,

@@ -138,8 +138,16 @@ object TableSink {
     }
     Files.createDirectories(Paths.get(table))
     conform(df, target).write.mode("append").parquet(s"$table/data")
-    Files.write(schemaPath(table), target.json.getBytes(StandardCharsets.UTF_8))
+    writeSchemaIfChanged(table, current, target)
   }
+
+  /** Rewrite the schema sidecar only when the schema changed: an unchanged
+    * batch leaves the file alone (on ext4 rewriting an existing file
+    * through `O_TRUNC` stalls the writer on a flush of the new data). */
+  private def writeSchemaIfChanged(table: String, current: Option[StructType],
+      target: StructType): Unit =
+    if (!current.contains(target))
+      Files.write(schemaPath(table), target.json.getBytes(StandardCharsets.UTF_8))
 
   /** Batch-tagged append: the idempotent append of a writer whose batches
     * carry a stable `(tag, batchId)`. The rows are written to
@@ -148,7 +156,8 @@ object TableSink {
     * batch left are deleted; the staged files are then renamed to
     * `data/<tag>-<batchId>-<i>.parquet`. A replay therefore replaces its
     * own files instead of adding to them, for one write job and no read.
-    * The schema sidecar is written only when rows landed.
+    * The schema sidecar is written only when rows landed and the schema
+    * changed.
     *
     * Returns the number of rows landed, or None — having run nothing —
     * when the protocol cannot prove idempotence: a file under `data/`
@@ -183,7 +192,7 @@ object TableSink {
         staged.zipWithIndex.foreach { case ((p, _), i) =>
           Files.move(p, dataDir.resolve(f"$prefix$i%05d.parquet"))
         }
-        Files.write(schemaPath(table), target.json.getBytes(StandardCharsets.UTF_8))
+        writeSchemaIfChanged(table, current, target)
       }
       deleteRecursive(staging)
       Some(staged.map(_._2).sum)

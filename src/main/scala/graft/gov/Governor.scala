@@ -1,6 +1,6 @@
 package graft.gov
 
-import java.util.concurrent.{Semaphore, TimeUnit}
+import java.util.concurrent.{ScheduledThreadPoolExecutor, Semaphore, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -125,20 +125,34 @@ final class Governor(val rails: Guardrails = Guardrails()) {
     val group = s"graft-${System.nanoTime()}"
     spark.sparkContext.setJobGroup(group, "governed query", interruptOnCancel = true)
     onGroup(group)
-    val timer = new java.util.Timer(true)
     @volatile var timedOut = false
-    timer.schedule(new java.util.TimerTask {
+    val deadline = Governor.timeouts.schedule(new Runnable {
       override def run(): Unit = {
         timedOut = true
         spark.sparkContext.cancelJobGroup(group)
       }
-    }, timeoutMs)
+    }, timeoutMs, TimeUnit.MILLISECONDS)
     try body
     catch {
       case e: Exception if timedOut => throw new QueryTimeoutException(timeoutMs)
     } finally {
-      timer.cancel()
+      deadline.cancel(false)
       spark.sparkContext.clearJobGroup()
     }
+  }
+}
+
+object Governor {
+  /** One daemon thread fires every governor's query deadlines, instead of
+    * a `Timer` thread started per query. Cancelled deadlines leave the
+    * queue at once, so a finished query holds no task until its timeout. */
+  private lazy val timeouts: ScheduledThreadPoolExecutor = {
+    val ex = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
+      val t = new Thread(r, "graft-query-timeout")
+      t.setDaemon(true)
+      t
+    })
+    ex.setRemoveOnCancelPolicy(true)
+    ex
   }
 }

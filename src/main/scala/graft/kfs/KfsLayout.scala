@@ -17,8 +17,13 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *   - `.kfst` time-index sidecar: 40-byte footer (magic `KFTF`, version,
   *     minTs, maxTs, minOffset, maxOffset) for time pruning
   *     (`discovery/time_index.go:32-49`)
-  *   - `manifest.json` per partition with per-segment stats, replacing LIST
-  *     storms (`discovery/manifest.go:50-66`)
+  *   - a per-partition manifest with per-segment stats, replacing LIST
+  *     storms (`discovery/manifest.go:50-66`), published as numbered
+  *     generations `{partition}/_manifest/{gen %020d}.json` — each commit
+  *     renames to a FRESH name and unlinks the superseded generation, never
+  *     replacing a file in place (on ext4 a rename onto an existing file,
+  *     like an `O_TRUNC` open, makes the kernel flush the new data first —
+  *     `auto_da_alloc` — and stalls the caller for tens of milliseconds)
   *
   * All IO goes through Hadoop `FileSystem`, so a root of `/local/dir`,
   * `file:///dir`, `hdfs://...` or `s3a://bucket/prefix` behaves identically —
@@ -96,7 +101,7 @@ object KfsLayout {
       compression: Int = KfsCompression.None): SegmentRef = {
     require(!topic.exists(c => c == '"' || c == '\\'),
       s"topic name must not contain quotes or backslashes: $topic")
-    val dir = new HPath(new HPath(root, topic), partition.toString)
+    val dir = partitionDir(root, topic, partition)
     val fs = dir.getFileSystem(if (conf != null) conf else hadoopConf)
     fs.mkdirs(dir)
     val base = records.head.offset
@@ -178,10 +183,43 @@ object KfsLayout {
       case _: java.io.EOFException => None // sidecar shorter than 40 bytes
     }
 
-  /** Write `manifest.json` for a topic/partition from its segment refs.
-    * Published via temp-write + rename in the sibling staging dir (same
-    * contract as segments): a concurrent manifest reader sees the old
-    * manifest or the new one, never a torn write. */
+  /** Directory of a partition's manifest generations. Its own directory,
+    * so a reader lists one or two entries instead of every segment and
+    * sidecar; [[listCompleted]] keeps only depth-3 `*.kfs` paths and Spark's
+    * file index skips `_`-prefixed directories, so neither sees it. */
+  private def manifestDir(root: String, topic: String, partition: Int): HPath =
+    new HPath(partitionDir(root, topic, partition), "_manifest")
+
+  /** The single-file manifest of earlier layouts, read when no generation
+    * exists and removed by the next publish. */
+  private def legacyManifest(root: String, topic: String, partition: Int): HPath =
+    new HPath(partitionDir(root, topic, partition), "manifest.json")
+
+  private def partitionDir(root: String, topic: String, partition: Int): HPath =
+    new HPath(new HPath(root, topic), partition.toString)
+
+  private val GenerationName = """(\d{20})\.json""".r
+
+  /** Published generations under `dir`, oldest first; empty when `dir` is
+    * absent. Checksum and staging files never match the name pattern. */
+  private def listGenerations(fs: FileSystem, dir: HPath): Seq[(Long, HPath)] =
+    (try fs.listStatus(dir).toSeq
+    catch { case _: FileNotFoundException => Nil })
+      .flatMap(st => st.getPath.getName match {
+        case GenerationName(g) => Some(g.toLong -> st.getPath)
+        case _ => None
+      }).sortBy(_._1)
+
+  /** Publish a topic/partition's manifest from its segment refs. The JSON
+    * is staged in the sibling staging dir (same contract as segments), then
+    * renamed to a FRESH generation `_manifest/{gen %020d}.json`, one past
+    * the newest listed; the superseded generations (and a legacy
+    * `manifest.json`) are deleted after. A reader lists the directory and
+    * opens the newest generation, so it sees the old manifest or the new
+    * one, never a torn one or none ([[readManifestRefs]] re-lists when a
+    * listed generation vanishes before it is opened). Two committers
+    * racing keep last-writer-wins: a taken generation name is skipped, and
+    * each deletes only generations older than its own. */
   def writeManifest(root: String, topic: String, partition: Int,
       refs: Seq[SegmentRef], conf: Configuration = null): Unit = {
     val entries = refs.sortBy(_.baseOffset).map { r =>
@@ -189,20 +227,30 @@ object KfsLayout {
         s""""min_ts_ms":${r.minTsMs},"max_ts_ms":${r.maxTsMs},"size_bytes":${r.sizeBytes}}"""
     }
     val json = s"""{"topic":"$topic","partition":$partition,"segments":[${entries.mkString(",")}]}"""
-    val p = new HPath(new HPath(new HPath(root, topic), partition.toString), "manifest.json")
-    val fs = p.getFileSystem(if (conf != null) conf else hadoopConf)
-    fs.mkdirs(p.getParent)
+    val dir = manifestDir(root, topic, partition)
+    val fs = dir.getFileSystem(if (conf != null) conf else hadoopConf)
+    fs.mkdirs(dir)
     val stagingDir = new HPath(root.stripSuffix("/") + "_staging")
     fs.mkdirs(stagingDir)
     val tmp = new HPath(stagingDir,
       s"$topic-$partition-manifest.json.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"cannot publish manifest $p")
+    @scala.annotation.tailrec
+    def publish(gen: Long, attempt: Int): Unit = {
+      val dest = new HPath(dir, f"$gen%020d.json")
+      if (fs.exists(dest) || !fs.rename(tmp, dest)) {
+        if (attempt >= ManifestAttempts) {
+          fs.delete(tmp, false)
+          throw new java.io.IOException(s"cannot publish manifest $dest")
+        }
+        publish(gen + 1, attempt + 1)
+      }
     }
+    val superseded = listGenerations(fs, dir)
+    publish(superseded.lastOption.fold(0L)(_._1 + 1), 1)
+    superseded.foreach { case (_, p) => fs.delete(p, false) }
+    fs.delete(legacyManifest(root, topic, partition), false)
   }
 
   /** Drop cached discovery results under `root` — callers that just
@@ -526,22 +574,36 @@ object KfsLayout {
 
   /** The committed manifest's refs, or None when no manifest exists —
     * usable executor-side with an explicit conf (the DSv2 writer's
-    * pre-write overlap guard). */
+    * pre-write overlap guard). Reads the newest generation listed under
+    * `_manifest/`, or the legacy `manifest.json` when there is none. A
+    * listed file that vanishes before it is opened (a concurrent publish
+    * deleted it) triggers a re-list, up to [[ManifestAttempts]] times;
+    * a missing file under an unchanged listing means no manifest. */
   def readManifestRefs(root: String, topic: String, partition: Int,
       conf: Configuration = null): Option[Seq[SegmentRef]] = {
-    val p = new HPath(new HPath(new HPath(root, topic), partition.toString), "manifest.json")
-    val fs = p.getFileSystem(if (conf != null) conf else hadoopConf)
-    val jsonOpt =
-      try {
-        val in = fs.open(p)
+    val dir = manifestDir(root, topic, partition)
+    val fs = dir.getFileSystem(if (conf != null) conf else hadoopConf)
+    @scala.annotation.tailrec
+    def read(attempt: Int, listed: Option[Seq[(Long, HPath)]]): Option[String] = {
+      val gens = listGenerations(fs, dir)
+      val p = gens.lastOption.fold(legacyManifest(root, topic, partition))(_._2)
+      val got =
         try {
-          val size = fs.getFileStatus(p).getLen.toInt
-          val bytes = new Array[Byte](size)
-          in.readFully(0, bytes)
-          Some(new String(bytes, StandardCharsets.UTF_8))
-        } finally in.close()
-      } catch { case _: FileNotFoundException => None }
-    jsonOpt.map { json =>
+          val in = fs.open(p)
+          try Right(new String(org.apache.commons.io.IOUtils.toByteArray(in),
+            StandardCharsets.UTF_8))
+          finally in.close()
+        } catch { case e: FileNotFoundException => Left(e) }
+      got match {
+        case Right(json) => Some(json)
+        case Left(_) if listed.contains(gens) => None
+        case Left(e) if attempt >= ManifestAttempts =>
+          throw new java.io.IOException(
+            s"manifest of $topic/$partition kept changing while read", e)
+        case Left(_) => read(attempt + 1, Some(gens))
+      }
+    }
+    read(1, None).map { json =>
       // minimal parser for our own manifest shape
       val entry = """\{"path":"([^"]+)","base_offset":(\d+),"last_offset":(\d+),"min_ts_ms":(-?\d+),"max_ts_ms":(-?\d+),"size_bytes":(\d+)\}""".r
       entry.findAllMatchIn(json).map { m =>
@@ -551,6 +613,11 @@ object KfsLayout {
       }.toSeq.sortBy(_.baseOffset)
     }
   }
+
+  /** Retry bound of a manifest publish or read: each retry means a
+    * concurrent publish took a generation name, or deleted a listed
+    * generation before it was opened. */
+  private val ManifestAttempts = 8
 
   /** Manifest-based discovery with LIST fallback (`manifest.go:68-135`). */
   def listFromManifest(root: String, topic: String, partition: Int): Seq[SegmentRef] =

@@ -36,8 +36,9 @@ import org.apache.spark.sql.types._
   *     identical bytes (same records → same file name and content).
   *   - COMMIT is the manifest flip: tasks report their [[KfsLayout.SegmentRef]]s
   *     to the driver, which merges them with each partition's existing
-  *     manifest, validates offset ranges don't overlap, and publishes
-  *     `manifest.json` atomically — manifest-based readers observe the
+  *     manifest, validates offset ranges don't overlap, and publishes the
+  *     next manifest generation (`_manifest/{gen}.json`, renamed to a fresh
+  *     name, never over the old one) — manifest-based readers observe the
   *     write only after commit (walk-based discovery may see completed
   *     segments earlier; the manifest is the transactional view, mirroring
   *     the reference where the broker's upload precedes index visibility).

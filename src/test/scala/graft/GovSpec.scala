@@ -117,6 +117,15 @@ class GovSpec extends AnyFunSuite {
     }
   }
 
+  test("withTimeout starts no timer thread per query") {
+    def timers = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread]).filter(_.getName.startsWith("Timer-")).toSet
+    val gov = new Governor(Guardrails(queryTimeoutMs = 60000))
+    val before = timers
+    val started = gov.withTimeout(spark, 60000)(timers -- before)
+    assert(started.isEmpty, s"a governed query started ${started.map(_.getName)}")
+  }
+
   // ---- topic ACL (proxy/acl.go:28-68, proxy.go:268-320) -------------------
 
   test("ACL allows: deny wins, empty allow = allow-all, globs (acl_test.go)") {

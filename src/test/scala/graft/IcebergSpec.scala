@@ -19,6 +19,43 @@ class IcebergSpec extends AnyFunSuite {
   private def tmpTable(): String =
     Files.createTempDirectory("iceberg").toString + "/t"
 
+  private def hintedVersion(table: String): Int =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(table, "metadata",
+      "version-hint.text")), "UTF-8").trim.toInt
+
+  test("version-hint.text names the current version after every commit kind") {
+    import spark.implicits._
+    val table = tmpTable()
+    def current = IcebergSink.load(spark, table).get.version
+    IcebergSink.append(spark, table, Seq((1L, 10L), (2L, 20L)).toDF("id", "v"))
+    assert(hintedVersion(table) == current)
+    IcebergSink.upsertAtomic(spark, table, Seq((2L, 21L), (3L, 30L)).toDF("id", "v"),
+      Seq("id"))
+    assert(hintedVersion(table) == current)
+    val beforeCompact = current
+    IcebergSink.compact(spark, table)
+    assert(current > beforeCompact && hintedVersion(table) == current)
+    val beforeExpire = current
+    IcebergSink.expireSnapshots(spark, table,
+      olderThanMs = System.currentTimeMillis() + 1000)
+    assert(current > beforeExpire && hintedVersion(table) == current)
+    assert(IcebergSink.read(spark, table).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 10L), (2L, 21L), (3L, 30L)))
+  }
+
+  test("load without a version hint still returns the current metadata") {
+    import spark.implicits._
+    val table = tmpTable()
+    (1 to 3).foreach(i => IcebergSink.append(spark, table, Seq((i.toLong, i)).toDF("id", "v")))
+    val hinted = IcebergSink.load(spark, table).get
+    Files.delete(java.nio.file.Paths.get(table, "metadata", "version-hint.text"))
+    val probed = IcebergSink.load(spark, table).get
+    assert(probed.version == hinted.version && probed.version > 1)
+    assert(probed.currentSnapshotId == hinted.currentSnapshotId)
+    assert(IcebergSink.read(spark, table).count() == 3)
+  }
+
   test("dynamic partition overwrite: replaces touched, keeps rest, time-travels") {
     import spark.implicits._
     val table = tmpTable()

@@ -388,6 +388,81 @@ class KfsSpec extends AnyFunSuite {
       fromList.map(r => (r.baseOffset, r.lastOffset)))
   }
 
+  private def manifestFiles(root: String, topic: String, partition: Int)
+      : Seq[String] = {
+    val dir = Paths.get(root, topic, partition.toString, "_manifest")
+    if (!Files.exists(dir)) Nil
+    else Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path]
+      .getFileName.toString).filter(_.endsWith(".json")).sorted.toSeq
+  }
+
+  /** The single-file `t/0/manifest.json` earlier versions published. */
+  private def writeLegacyManifest(root: String,
+      segments: Seq[(String, Long, Long)]): Unit =
+    Files.write(Paths.get(root, "t", "0", "manifest.json"),
+      segments.map { case (path, base, last) =>
+        s"""{"path":"$path","base_offset":$base,"last_offset":$last,""" +
+          s""""min_ts_ms":$base,"max_ts_ms":$last,"size_bytes":1}"""
+      }.mkString("""{"topic":"t","partition":0,"segments":[""", ",", "]}")
+        .getBytes("UTF-8"))
+
+  private def appendKfs(root: String, offsets: Seq[Long]): Unit = {
+    import spark.implicits._
+    offsets.map(o => ("t", 0, o, 1706000000000L + o,
+      s"k$o".getBytes("UTF-8"), s"v$o".getBytes("UTF-8")))
+      .toDF("_topic", "_partition", "_offset", "_ts_ms", "_key", "_value")
+      .write.format("kfs").mode("append").option("path", root).save()
+  }
+
+  test("a legacy manifest.json estate is still read by listFromManifest") {
+    val root = Files.createTempDirectory("kfs_legacy").toString
+    val ref = KfsLayout.writeSegment(root, "t", 0, mkRecords(10))
+    // "gone" names no file, so only the manifest can return it
+    writeLegacyManifest(root, Seq((ref.path, 0L, 9L), ("gone", 10L, 19L)))
+    assert(KfsLayout.listFromManifest(root, "t", 0)
+      .map(r => (r.path, r.baseOffset, r.lastOffset, r.minTsMs)) ==
+      Seq((ref.path, 0L, 9L, 0L), ("gone", 10L, 19L, 10L)))
+  }
+
+  test("the first append over a legacy manifest publishes generation 0 and removes it") {
+    val root = Files.createTempDirectory("kfs_legacy_up").toString
+    val ref = KfsLayout.writeSegment(root, "t", 0, mkRecords(10))
+    writeLegacyManifest(root, Seq((ref.path, 0L, 9L)))
+    appendKfs(root, 10L until 20L)
+    assert(manifestFiles(root, "t", 0) == Seq("00000000000000000000.json"))
+    assert(!Files.exists(Paths.get(root, "t", "0", "manifest.json")))
+    assert(KfsLayout.listFromManifest(root, "t", 0)
+      .map(r => (r.baseOffset, r.lastOffset)) == Seq((0L, 9L), (10L, 19L)))
+  }
+
+  test("after N appends and a deleteRecords exactly one manifest generation remains") {
+    val root = Files.createTempDirectory("kfs_gens").toString
+    (0 until 4).foreach { i =>
+      appendKfs(root, i * 10L until (i + 1) * 10L)
+      assert(manifestFiles(root, "t", 0) == Seq(f"$i%020d.json"))
+    }
+    KfsRetention.deleteRecords(root, "t", Map(0 -> 20L))
+    assert(manifestFiles(root, "t", 0) == Seq(f"${4}%020d.json"))
+    assert(KfsLayout.listFromManifest(root, "t", 0)
+      .map(r => (r.baseOffset, r.lastOffset)) == Seq((20L, 29L), (30L, 39L)))
+  }
+
+  test("a reader whose listed manifest generation is deleted re-lists and reads the newer one") {
+    val root = Files.createTempDirectory("kfs_gen_race").toString
+    val a = KfsLayout.writeSegment(root, "t", 0, mkRecords(10))
+    val b = KfsLayout.writeSegment(root, "t", 0,
+      mkRecords(10).map(r => r.copy(offset = r.offset + 10)))
+    KfsLayout.writeManifest(root, "t", 0, Seq(a))
+    // a concurrent commit lands between the reader's listing and its open:
+    // it publishes generation 1 and deletes generation 0, the one listed
+    ProbeLocalFileSystem.afterList.set(_ =>
+      KfsLayout.writeManifest(root, "t", 0, Seq(a, b)))
+    val refs = KfsLayout.readManifestRefs(root, "t", 0, ProbeLocalFileSystem.conf)
+    assert(ProbeLocalFileSystem.afterList.get == null, "the hook must have run")
+    assert(refs.map(_.map(_.baseOffset)).contains(Seq(0L, 10L)))
+    assert(manifestFiles(root, "t", 0) == Seq(f"${1}%020d.json"))
+  }
+
   test("segment pruning by offset/time range intersects stats windows") {
     val refs = Seq(
       KfsLayout.SegmentRef("t", 0, "a", 0, 99, 1000, 1999, 1),
@@ -753,7 +828,8 @@ class KfsSpec extends AnyFunSuite {
       val refs = KfsLayout.listFromManifest(root, t, p)
       assert(refs.nonEmpty && refs.length >= 3) // 40 records / 16 cap
       assert(refs.head.baseOffset == 0 && refs.last.lastOffset == 39)
-      assert(Files.exists(Paths.get(root, t, p.toString, "manifest.json")))
+      assert(Files.exists(Paths.get(root, t, p.toString, "_manifest",
+        "00000000000000000000.json")))
     }
 
     val back = spark.read.format("kfs").option("path", root).load()
